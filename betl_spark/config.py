@@ -43,7 +43,6 @@ class ScheduleConfig:
     run_transform: bool = True
     run_load: bool = True
     run_summarise: bool = True
-    run_dataflows: bool = True
     default_extract: bool = True
     default_load: bool = True
     default_summarise: bool = True

@@ -48,7 +48,6 @@ class ScaleOps:
         nHashes: int = 16,
         bands: int = 4,
         minEstJaccard: float = 0.5,
-        algorithm: str = "star",
         desc: str = "",
     ) -> DataFrame:
         """End-to-end near-dup removal: LSH pairs → connected
@@ -67,7 +66,6 @@ class ScaleOps:
             )
             clusters = dedup.duplicate_clusters(
                 pairs.select("id_a", "id_b"),
-                algorithm=algorithm,
                 # minhash_near_dups ends in groupBy(id_a, id_b): unique
                 edges_unique=True,
             )

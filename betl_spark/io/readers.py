@@ -30,10 +30,9 @@ def read_csv_all_string(
 ) -> DataFrame:
     """CSV scan with every column str and '' (not null) for missing
     (reference betl/io/fileIO.py:26-51: dtype=str + na_filter=False)."""
-    header = spark.read.option("header", True).option("sep", delimiter).csv(path).schema
+    # header=True without inferSchema already types every column string
     df = (
-        spark.read.schema(all_string_schema(header.fieldNames()))
-        .option("header", True)
+        spark.read.option("header", True)
         .option("sep", delimiter)
         .option("quote", quotechar)
         .option("emptyValue", "")

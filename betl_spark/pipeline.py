@@ -8,6 +8,11 @@ topological runner; every task receives a fresh ``DataFlow`` bound to
 the shared Conf/SparkSession, so tasks only communicate through staged
 data — the same contract that lets the reference run each task in its
 own Airflow worker.
+
+``run`` (the gated stages) and ``schedule_dataflows`` (bespoke dataflows
+with an upstream dict) both build a list of ``(task_id, fn, upstream)``
+tasks that one executor runs and one exporter turns into a DAG spec or
+an Airflow DAG, so a local run and a scheduler never disagree on order.
 """
 
 from __future__ import annotations
@@ -19,6 +24,8 @@ from pyspark.sql import SparkSession
 from betl_spark.config import Conf
 from betl_spark.schema.registry import SchemaRegistry
 from betl_spark.session import build_spark
+
+Task = tuple[str, Callable, list[str]]
 
 
 class Pipeline:
@@ -49,66 +56,92 @@ class Pipeline:
         as a deterministic topological order instead of an Airflow DAG.
 
         Ties break in the given list order, so a run is reproducible.
-        Raises ValueError on cycles or unknown dependency names.
+        Returns the dataflow names in run order. Raises ValueError, before
+        any dataflow runs, on duplicate names, unknown dependency names
+        or cycles.
         """
-        upstream = upstream or {}
-        by_name = {fn.__name__: fn for fn in dataflows}
-        for name, deps in upstream.items():
-            unknown = [d for d in [name, *deps] if d not in by_name]
-            if unknown:
-                raise ValueError(f"unknown dataflow(s) in upstream: {unknown}")
-        done: list[str] = []
-        remaining = [fn.__name__ for fn in dataflows]
-        while remaining:
-            ready = [
-                n for n in remaining
-                if all(d in done for d in upstream.get(n, []))
-            ]
-            if not ready:
-                raise ValueError(f"dependency cycle among: {sorted(remaining)}")
-            n = ready[0]
-            remaining.remove(n)
-            self._run_task(f"dataflow_{n}", by_name[n])
-            done.append(n)
-        return done
+        order = self._execute(self._dataflow_tasks(dataflows, upstream))
+        return [fn.__name__ for _, fn, _ in order]
 
     def _run_task(self, name: str, fn: Callable) -> None:
         self.run_log.append(name)
         fn(self)
 
-    def _plan_groups(self) -> list[list[tuple[str, Callable]]]:
-        """The gated stage sequence (reference PipelineClass.py:66-420)
-        as ordered barrier groups of (task_id, callable): tasks within
-        a group are independent; every task depends on ALL tasks of the
-        previous non-empty group. This preserves the hard rules — dims
-        strictly before facts (PipelineClass.py:203-208), date/audit
-        dims before bespoke transforms — while exposing the real
-        parallelism (per-source extracts, per-dimension bulk loads) to
-        any executor, Airflow included.
+    @staticmethod
+    def _dataflow_tasks(
+        dataflows: list[Callable], upstream: dict[str, list[str]] | None
+    ) -> list[Task]:
+        """The plan of a ``schedule_dataflows`` workload, validated:
+        dataflows are addressed by ``__name__``, so a repeated name (two
+        closures from one factory) would make one of them unreachable."""
+        upstream = upstream or {}
+        names = [fn.__name__ for fn in dataflows]
+        dups = sorted({n for n in names if names.count(n) > 1})
+        if dups:
+            raise ValueError(f"duplicate dataflow name(s): {dups}")
+        unknown = [
+            d for n, deps in upstream.items() for d in [n, *deps] if d not in names
+        ]
+        if unknown:
+            raise ValueError(f"unknown dataflow(s) in upstream: {unknown}")
+        tasks = [
+            (f"dataflow_{n}", fn, [f"dataflow_{d}" for d in upstream.get(n, [])])
+            for n, fn in zip(names, dataflows)
+        ]
+        Pipeline._order(tasks)  # raises on a cycle
+        return tasks
 
-        Single source of truth: ``run`` executes this plan and
-        ``to_dag_spec``/``to_airflow_dag`` export it, so the local
-        topological runner and a DAG scheduler can never disagree on
-        ordering.
+    @staticmethod
+    def _order(tasks: list[Task]) -> list[Task]:
+        """Topological order, ties broken by list order. A task waits for
+        every task that carries an id in its upstream, so a ``run`` plan
+        in which two same-named callables share an id still runs."""
+        left, order = list(tasks), []
+        while left:
+            blocked = {task_id for task_id, _, _ in left}
+            ready = [i for i, (_, _, up) in enumerate(left) if blocked.isdisjoint(up)]
+            if not ready:
+                raise ValueError(f"dependency cycle among: {sorted(blocked)}")
+            order.append(left.pop(ready[0]))
+        return order
+
+    def _execute(self, tasks: list[Task]) -> list[Task]:
+        """Run each task exactly once, in ``_order``; returns that order."""
+        order = self._order(tasks)
+        for task_id, fn, _ in order:
+            self._run_task(task_id, fn)
+        return order
+
+    @staticmethod
+    def _export(tasks: list[Task]) -> list[dict]:
+        """Tasks in list order as serializable {"task_id", "upstream"}."""
+        return [{"task_id": t, "upstream": list(up)} for t, _, up in tasks]
+
+    def _plan_groups(self) -> list[Task]:
+        """The gated stage sequence (reference PipelineClass.py:66-420)
+        as ordered barrier groups: tasks within a group are independent;
+        every task depends on ALL tasks of the previous non-empty group.
+        This preserves the hard rules — dims strictly before facts
+        (PipelineClass.py:203-208), date/audit dims before bespoke
+        transforms — while exposing the real parallelism (per-source
+        extracts, per-dimension bulk loads) to any executor, Airflow
+        included. Returns the groups flattened into one task list.
         """
         sched = self.conf.schedule
         from betl_spark import defaults
 
+        def user(prefix: str, fns: list[Callable]) -> list[tuple[str, Callable]]:
+            return [(f"{prefix}_{fn.__name__}", fn) for fn in fns]
+
         groups: list[list[tuple[str, Callable]]] = []
         if sched.run_extract:
-            g: list[tuple[str, Callable]] = []
-            if sched.default_extract:
-                for src_id in sched.src_system_ids:
-                    g.append((
-                        f"bulkExtract_{src_id}",
-                        lambda p, s=src_id: defaults.bulk_extract(
-                            p, s, sched.bulk_or_delta
-                        ),
-                    ))
-            g.extend(
-                (f"extract_{fn.__name__}", fn) for fn in sched.extract_dataflows
-            )
-            groups.append(g)
+            groups.append([
+                (
+                    f"bulkExtract_{src_id}",
+                    lambda p, s=src_id: defaults.bulk_extract(p, s, sched.bulk_or_delta),
+                )
+                for src_id in (sched.src_system_ids if sched.default_extract else [])
+            ] + user("extract", sched.extract_dataflows))
 
         if sched.run_transform:
             if sched.default_load:  # date/audit dims are load prerequisites
@@ -116,16 +149,11 @@ class Pipeline:
                     ("transformDMDate", defaults.transform_dm_date),
                     ("transformDMAudit", defaults.transform_dm_audit),
                 ])
-            groups.append([
-                (f"transform_{fn.__name__}", fn)
-                for fn in sched.transform_dataflows
-            ])
+            groups.append(user("transform", sched.transform_dataflows))
 
         if sched.run_load:
             # dims strictly before facts (reference PipelineClass.py:203-208)
-            groups.append([
-                (f"loadDim_{fn.__name__}", fn) for fn in sched.load_dim_dataflows
-            ])
+            groups.append(user("loadDim", sched.load_dim_dataflows))
             if sched.default_load:
                 groups.append([
                     (
@@ -134,10 +162,7 @@ class Pipeline:
                     )
                     for dim in self.registry.tables("BSE", "DIMENSION")
                 ])
-            groups.append([
-                (f"loadFactPrep_{fn.__name__}", fn)
-                for fn in sched.load_fact_dataflows
-            ])
+            groups.append(user("loadFactPrep", sched.load_fact_dataflows))
             if sched.default_load:
                 groups.append([
                     (
@@ -149,14 +174,15 @@ class Pipeline:
 
         if sched.run_summarise:
             if sched.default_summarise:
-                groups.append([
-                    ("summarisePrep", defaults.default_summarise_prep)
-                ])
-            groups.append([
-                (f"summarise_{fn.__name__}", fn)
-                for fn in sched.summarise_dataflows
-            ])
-        return [g for g in groups if g]
+                groups.append([("summarisePrep", defaults.default_summarise_prep)])
+            groups.append(user("summarise", sched.summarise_dataflows))
+
+        tasks: list[Task] = []
+        prev: list[str] = []
+        for group in filter(None, groups):
+            tasks.extend((task_id, fn, prev) for task_id, fn in group)
+            prev = [task_id for task_id, _ in group]
+        return tasks
 
     def run(self) -> list[str]:
         """Execute the gated stage sequence: extract → transform →
@@ -164,9 +190,7 @@ class Pipeline:
         callables taking the pipeline; default dataflows come from
         ``betl_spark.defaults``.
         """
-        for group in self._plan_groups():
-            for name, fn in group:
-                self._run_task(name, fn)
+        self._execute(self._plan_groups())
         return self.run_log
 
     def dataflows_dag_spec(
@@ -181,23 +205,7 @@ class Pipeline:
         scheduler's own rules, so a spec that exports is a spec that
         runs.
         """
-        upstream = upstream or {}
-        by_name = {fn.__name__: fn for fn in dataflows}
-        for name, deps in upstream.items():
-            unknown = [d for d in [name, *deps] if d not in by_name]
-            if unknown:
-                raise ValueError(f"unknown dataflow(s) in upstream: {unknown}")
-        return {
-            "tasks": [
-                {
-                    "task_id": f"dataflow_{fn.__name__}",
-                    "upstream": [
-                        f"dataflow_{d}" for d in upstream.get(fn.__name__, [])
-                    ],
-                }
-                for fn in dataflows
-            ]
-        }
+        return {"tasks": self._export(self._dataflow_tasks(dataflows, upstream))}
 
     def to_dag_spec(self) -> dict:
         """The run plan as a serializable DAG spec — the engine's
@@ -207,15 +215,7 @@ class Pipeline:
         [...]}...]}; hand it to any scheduler, or use
         ``to_airflow_dag`` when the airflow package is installed.
         """
-        tasks = []
-        prev: list[str] = []
-        for group in self._plan_groups():
-            names = [name for name, _ in group]
-            tasks.extend(
-                {"task_id": n, "upstream": list(prev)} for n in names
-            )
-            prev = names
-        return {"tasks": tasks}
+        return {"tasks": self._export(self._plan_groups())}
 
     def to_airflow_dag(self, dag):
         """Attach the run plan to an Airflow DAG as PythonOperators
@@ -231,19 +231,15 @@ class Pipeline:
                 "to_airflow_dag requires apache-airflow; use to_dag_spec() "
                 "for a scheduler-agnostic plan"
             ) from exc
+        tasks = self._plan_groups()
         ops: dict[str, object] = {}
-        prev: list[str] = []
-        for group in self._plan_groups():
-            names = []
-            for name, fn in group:
-                op = PythonOperator(
-                    task_id=name,
-                    python_callable=lambda p=self, f=fn, n=name: p._run_task(n, f),
-                    dag=dag,
-                )
-                for up in prev:
-                    op.set_upstream(ops[up])
-                ops[name] = op
-                names.append(name)
-            prev = names
+        for (_, fn, _), spec in zip(tasks, self._export(tasks)):
+            name = spec["task_id"]
+            ops[name] = PythonOperator(
+                task_id=name,
+                python_callable=lambda p=self, f=fn, n=name: p._run_task(n, f),
+                dag=dag,
+            )
+            for up in spec["upstream"]:
+                ops[name].set_upstream(ops[up])
         return ops

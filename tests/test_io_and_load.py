@@ -203,6 +203,32 @@ def test_schedule_dataflows_topological(spark, tmp_path):
     with _pytest.raises(ValueError, match="unknown"):
         p.schedule_dataflows([load_dim], upstream={"load_dim": ["nope"]})
 
+    # two closures from one factory share a __name__: refused before any
+    # task runs, not run as the last one twice
+    def mk(tag):
+        def step(pl):
+            order.append(tag)
+        return step
+
+    order.clear()
+    with _pytest.raises(ValueError, match="duplicate"):
+        p.schedule_dataflows([mk("first"), mk("second")])
+    with _pytest.raises(ValueError, match="duplicate"):
+        p.dataflows_dag_spec([mk("first"), mk("second")])
+    assert order == []
+
+
+def test_csv_header_honours_a_non_default_quotechar(spark, tmp_path):
+    """The header is parsed with the same quote character as the rows,
+    so a quoted delimiter inside a header cell stays one column."""
+    from betl_spark.io.readers import read_csv_all_string
+
+    path = tmp_path / "q.csv"
+    path.write_text("'a,b',c\n'1,2',3\n")
+    df = read_csv_all_string(spark, str(path), quotechar="'")
+    assert df.columns == ["a,b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("1,2", "3")]
+
 
 def test_jsonl_datastore_read_write_and_inference(spark, tmp_path):
     """JSONL source end-to-end: write_jsonl export, Datastore scan with
@@ -314,6 +340,22 @@ def test_pipeline_run_executes_the_dag_spec_order(spark, tmp_path):
     assert log == spec_ids == ["extract_ex_a", "transform_tr_b", "loadDim_ld_c"]
     assert ran == ["ex_a", "tr_b", "ld_c"]
 
+    # stage-plan upstream is positional: two same-named callables both run
+    def mk(tag):
+        def step(p):
+            ran.append(tag)
+        return step
+
+    conf.schedule = ScheduleConfig(
+        default_extract=False, default_load=False, default_summarise=False,
+        transform_dataflows=[mk("first"), mk("second")],
+    )
+    ran.clear()
+    assert Pipeline(conf, registry=SchemaRegistry(), spark=spark).run() == [
+        "transform_step", "transform_step"
+    ]
+    assert ran == ["first", "second"]
+
 
 def test_pipeline_to_airflow_dag_raises_without_airflow(spark, tmp_path):
     from betl_spark.config import Conf
@@ -360,6 +402,11 @@ def test_dataflows_dag_spec_mirrors_scheduler_contract(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="unknown dataflow"):
         p.dataflows_dag_spec([extract], upstream={"extract": ["missing"]})
+    # a spec that exports is a spec that runs: cycles are refused too
+    with _pytest.raises(ValueError, match="cycle"):
+        p.dataflows_dag_spec(
+            [extract, load_dim], upstream={"extract": ["load_dim"], "load_dim": ["extract"]}
+        )
 
 
 def test_orc_roundtrip_via_datastore(spark, tmp_path):
